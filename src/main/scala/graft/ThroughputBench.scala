@@ -18,9 +18,10 @@ import graft.core.MetricConfig
   * discipline matches `Bench`: first passes pay codegen + JIT, and a
   * long-lived cluster session is the representative setting.
   *
-  * Baseline for comparison (BASELINE.md): the reference's whylogs-on-
-  * Spark run implies ~5.5M cells/s/vCPU; divide this harness's number by
-  * `cores` for the per-core figure.
+  * Baseline for comparison: the reference's whylogs-on-Spark run
+  * (BASELINE.md, 2 × c5a.2xlarge) is pinned at 0.59M cells/s/vCPU; the
+  * arithmetic is in `perfbench/README.md`, "Reference throughput".
+  * Divide this harness's number by `cores` for the per-core figure.
   */
 object ThroughputBench {
   def main(args: Array[String]): Unit = {

@@ -3,7 +3,9 @@ package graft.api
 import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{functions => F}
 
@@ -16,9 +18,12 @@ import graft.profile.{DatasetProfileView, ProfileSerde}
   *
   * Layout: parquet files under `path/dataset_id=<id>/date=<yyyy-MM-dd>/`, rows
   * `(dataset_ts long, profile binary)` where `profile` is a GRFT1 blob
-  * (KB-scale per profile). Range queries read only matching partitions;
-  * the merge of the returned profiles is driver-side monoid algebra over
-  * KBs — the profiled datasets are never rescanned.
+  * (KB-scale per profile). Range queries list and read only matching
+  * partitions: the driver lists the one `dataset_id=` directory and hands
+  * Spark just the window's `date=` directories, so a read's cost follows
+  * its window, not the store's age. The merge of the returned profiles is
+  * driver-side monoid algebra over KBs — the profiled datasets are never
+  * rescanned.
   *
   * Segmented results are written distributed ([[writeSegmented]]): each
   * segment row is serialized on the executors, so a million-segment
@@ -122,11 +127,44 @@ class ProfileStore(spark: SparkSession, path: String) {
       }
   }
 
-  private def df(datasetId: String, fromMs: Long, toMs: Long): DataFrame =
-    spark.read.schema(schema).parquet(path)
-      .filter(F.col("dataset_id") === datasetId)
-      .filter(F.col("date") >= dateOf(fromMs) && F.col("date") <= dateOf(toMs))
+  /** Rows of datasetId in [fromMs, toMs]: [[partitions]] plus the
+    * dataset_ts filter. */
+  private[graft] def df(datasetId: String, fromMs: Long, toMs: Long): DataFrame =
+    partitions(datasetId, fromMs, toMs)
       .filter(F.col("dataset_ts") >= fromMs && F.col("dataset_ts") <= toMs)
+
+  /** The store's one read path: every row of the datasetId's date
+    * partitions in [dateOf(fromMs), dateOf(toMs)]. The dataset's directory
+    * is listed once on the driver and Spark is handed only the matching
+    * `date=` directories (with `basePath`, so both partition columns are
+    * still recovered). Pointing Spark at the root instead would list every
+    * date the dataset has ever written -- as a distributed listing job
+    * once there are more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` of them --
+    * before pruning discarded them, so a read's cost would grow with the
+    * store's age rather than with its window. A missing dataset or an
+    * empty window is an empty result; a missing store root still fails
+    * with Spark's own PATH_NOT_FOUND. */
+  private def partitions(datasetId: String, fromMs: Long, toMs: Long): DataFrame = {
+    val (lo, hi) = (dateOf(fromMs), dateOf(toMs))
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val dsDir = new Path(root, s"dataset_id=${escapePathName(datasetId)}")
+    val dirs: Seq[String] =
+      if (fs.exists(dsDir))
+        fs.listStatus(dsDir).toSeq.filter(_.isDirectory).map(_.getPath).filter { p =>
+          val d = unescapePathName(p.getName.stripPrefix("date="))
+          p.getName.startsWith("date=") && d >= lo && d <= hi
+        }.map(_.toString)
+      else if (fs.exists(root)) Nil
+      else Seq(path) // Spark raises its PATH_NOT_FOUND
+    val rows =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.read.schema(schema).option("basePath", path).parquet(dirs: _*)
+    rows
+      .filter(F.col("dataset_id") === datasetId)
+      .filter(F.col("date") >= lo && F.col("date") <= hi)
+  }
 
   /** Compact the store: collapse every (date, segment) group of the
     * datasetId's partitions in [fromMs, toMs] into ONE merged profile
@@ -156,9 +194,7 @@ class ProfileStore(spark: SparkSession, path: String) {
   def compact(datasetId: String, fromMs: Long, toMs: Long): Unit = {
     import spark.implicits._
     val id = datasetId
-    val merged = spark.read.schema(schema).parquet(path)
-      .filter(F.col("dataset_id") === id)
-      .filter(F.col("date") >= dateOf(fromMs) && F.col("date") <= dateOf(toMs))
+    val merged = partitions(id, fromMs, toMs)
       .select("date", "segment", "dataset_ts", "profile")
       .as[(String, String, Long, Array[Byte])]
       .groupByKey { r: (String, String, Long, Array[Byte]) => (r._1, Option(r._2)) }

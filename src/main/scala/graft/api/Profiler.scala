@@ -26,7 +26,18 @@ class Profiler(
 
   import LogicalKind._
 
-  /** The aggregate Column (a struct of metric structs) for one input column. */
+  /** Time types as the longs the ints, distribution and cardinality
+    * namespaces track: a date as its epoch day (`unix_date`), a timestamp
+    * as its epoch second. `CAST(DATE AS BIGINT)` is not an option: Spark
+    * 4's ANSI mode rejects it, and without ANSI it is NULL. */
+  private def ordinal(c: Column, t: DataType): Column = t match {
+    case DateType => F.unix_date(c).cast(LongType)
+    case _        => c.cast(LongType)
+  }
+
+  /** The aggregate Column (a struct of metric structs) for one input
+    * column. Date columns are profiled as epoch days and timestamp
+    * columns as epoch seconds (see [[ordinal]]). */
   def aggColumnFor(field: StructField): Option[Column] = {
     val kind = LogicalKind.of(field.dataType)
     val metrics = resolver.metricsFor(field.name, kind)
@@ -81,17 +92,13 @@ class Profiler(
           st.as("string"), ob.as("obj"), te.as("tensor")).as(Namespace.Types))
 
       case Namespace.Ints if kind == Integral || kind == Bool =>
-        val asLong = field.dataType match {
-          case DateType      => c.cast(LongType)
-          case TimestampType => c.cast(LongType)
-          case _             => c.cast(LongType)
-        }
+        val asLong = ordinal(c, field.dataType)
         Some(F.struct(F.min(asLong).as("min"), F.max(asLong).as("max")).as(Namespace.Ints))
       case Namespace.Ints => None
 
       case Namespace.Distribution if kind != Str && kind != AnyKind && kind != Tensor =>
         val child = field.dataType match {
-          case TimestampType | DateType => c.cast(LongType)
+          case TimestampType | DateType => ordinal(c, field.dataType)
           case BooleanType              => c.cast(IntegerType)
           case _                        => c
         }
@@ -100,7 +107,7 @@ class Profiler(
 
       case Namespace.Cardinality =>
         val child = field.dataType match {
-          case TimestampType | DateType => c.cast(LongType)
+          case TimestampType | DateType => ordinal(c, field.dataType)
           case _                        => c
         }
         Some(cardinality_agg(child, config.hllLgK, config.numStdDev).as(Namespace.Cardinality))

@@ -100,15 +100,23 @@ class PlanSpec extends SparkSpec {
     val day = 86400000L
     store.writeAll(Seq((view, 0L), (view, day), (view, 2 * day)), "ds_a")
     store.writeAll(Seq((view, 0L)), "ds_b")
-    // read one dataset, one day, out of 4 partitions on disk
-    val one = spark.read.parquet(dir)
-      .filter(F.col("dataset_id") === "ds_a" && F.col("date") === "1970-01-02")
+    // read one dataset, one day, out of 4 partitions on disk, through the
+    // store's own reader
+    val one = store.df("ds_a", day, day)
     one.collect()
-    val plan = one.queryExecution.executedPlan.toString
-    val pf = "PartitionFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(plan).map(_.group(1))
-    assert(pf.exists(f => f.contains("dataset_id") && f.contains("date")),
+    val files = one.inputFiles.toSeq
+    assert(files.nonEmpty && files.forall(_.contains("/dataset_id=ds_a/date=1970-01-02/")),
+      s"files outside the queried partition: $files")
+    assert(!files.exists(_.contains("ds_b")), s"another dataset's files listed: $files")
+    val plan = one.queryExecution.executedPlan
+    val scan = flattenPlan(plan).collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.getOrElse(fail(s"no file scan:\n$plan"))
+    def cols(fs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      fs.flatMap(_.references.map(_.name)).toSet
+    assert(cols(scan.partitionFilters) == Set("dataset_id", "date"),
       s"partition filters not applied at the scan:\n$plan")
-    assert(!plan.contains("PushedFilters: [IsNotNull(dataset_id)"),
+    assert(cols(scan.dataFilters).intersect(Set("dataset_id", "date")).isEmpty,
       "partition columns must prune directories, not filter rows")
   }
 

@@ -155,4 +155,30 @@ class ProfilerSpec extends SparkSpec {
     assert(view.columns("c7").ints.get.max.contains(96L))
     assert(view.columns("c0").distribution.get.n == 2000)
   }
+
+  test("date columns profile as epoch days with and without ANSI mode") {
+    // every 10th row NULL, the rest 2024-01-01 plus (id % 300) days
+    val start = java.time.LocalDate.parse("2024-01-01")
+    val dates = spark.range(1000).select(
+      F.when(F.col("id") % 10 === 0, F.lit(null).cast("date"))
+        .otherwise(F.date_add(F.lit(start.toString).cast("date"), (F.col("id") % 300).cast("int")))
+        .as("d"))
+    val exactDistinct = dates.select(F.countDistinct("d")).head.getLong(0)
+    val ansiKey = "spark.sql.ansi.enabled"
+    val ansi = spark.conf.get(ansiKey)
+    try for (mode <- Seq("true", "false")) {
+      spark.conf.set(ansiKey, mode)
+      val d = profiler.profile(dates).columns("d")
+      assert(d.counts.get.n == 1000 && d.counts.get.nulls == 100, mode)
+      assert(d.ints.get.min.contains(start.toEpochDay + 1), mode)
+      assert(d.ints.get.max.contains(start.toEpochDay + 299), mode)
+      val dist = d.distribution.get
+      assert(dist.n == 900, mode)
+      assert(dist.min.contains((start.toEpochDay + 1).toDouble), mode)
+      assert(dist.max.contains((start.toEpochDay + 299).toDouble), mode)
+      val card = d.cardinality.get
+      assert(card.lower <= exactDistinct && exactDistinct <= card.upper,
+        s"$mode: $exactDistinct outside [${card.lower}, ${card.upper}]")
+    } finally spark.conf.set(ansiKey, ansi)
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.{functions => F}
 
 import graft.api.{Profiler, ProfileStore}
@@ -209,5 +210,122 @@ class StoreSpec extends SparkSpec {
       metadata = Map("note" -> big))
     val back = graft.profile.ProfileSerde.fromBytes(graft.profile.ProfileSerde.toBytes(view))
     assert(back.metadata("note") == big)
+  }
+
+  private val Day = 86400000L
+
+  /** 40 daily profiles of one dataset ("daily"), from one segmented
+    * profiling job; `day0` is the first day. More dates than Spark's
+    * parallel-listing threshold (32). */
+  private lazy val (dailyDir, day0) = {
+    val dir = tmpDir()
+    val d0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
+    val rows = spark.range(40 * 50).select(
+      (F.col("id") % 40).as("day"), F.col("id").as("v"), (F.col("id") * 7 % 13).as("w"))
+    val byDay = new Profiler().profileSegmented(rows, Seq("day"))
+    new ProfileStore(spark, dir).writeAll(
+      byDay.toSeq.map { case (k, view) => view -> (d0 + k.head.toLong * Day) }, "daily")
+    (dir, d0)
+  }
+
+  test("range reads of an absent dataset or an empty window return nothing") {
+    val store = new ProfileStore(spark, dailyDir)
+    assert(store.read("absent", day0, day0 + 10 * Day).isEmpty)
+    assert(store.readSegments("absent", day0, day0 + 10 * Day).isEmpty)
+    assert(store.readMerged("absent", day0, day0 + 10 * Day).columns.isEmpty)
+    // a window before the first and one after the last written date
+    assert(store.read("daily", day0 - 10 * Day, day0 - Day).isEmpty)
+    assert(store.read("daily", day0 + 50 * Day, day0 + 60 * Day).isEmpty)
+    // a reversed window
+    assert(store.read("daily", day0 + 5 * Day, day0).isEmpty)
+  }
+
+  test("a store root that does not exist fails with PATH_NOT_FOUND") {
+    val store = new ProfileStore(spark, tmpDir() + "/absent")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      store.read("daily", 0L, Day)
+    }
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
+
+  test("dataset ids that need path escaping are found under their escaped directory") {
+    val dir = tmpDir()
+    val store = new ProfileStore(spark, dir)
+    val view = new Profiler().profile(table("nation"), Some(Seq("n_nationkey")))
+    val ids = Seq("ds one", "a=b", "a", "p%q", "x/y")
+    ids.zipWithIndex.foreach { case (id, i) =>
+      store.writeAll(Seq.fill(i + 1)(view -> day0), id)
+    }
+    ids.zipWithIndex.foreach { case (id, i) =>
+      assert(new java.io.File(dir, s"dataset_id=${escapePathName(id)}").isDirectory, id)
+      assert(store.read(id, day0, day0).length == i + 1, id)
+    }
+  }
+
+  test("an open-ended read (0, Long.MaxValue) returns every profile") {
+    val store = new ProfileStore(spark, dailyDir)
+    val all = store.read("daily", 0L, Long.MaxValue)
+    assert(all.map(_._1) == (0 until 40).map(d => day0 + d * Day))
+    assert(store.readMerged("daily", 0L, Long.MaxValue).columns("v").counts.get.n == 40 * 50)
+  }
+
+  test("a window of more than 32 dates merges like a pruned whole-store read") {
+    val store = new ProfileStore(spark, dailyDir)
+    val (from, to) = (day0 + 2 * Day, day0 + 36 * Day + 1000L)
+    val (lo, hi) = (ProfileStore.dateOf(from), ProfileStore.dateOf(to))
+    // the root-listing reader: Spark discovers every partition, then prunes
+    val pruned = spark.read.parquet(dailyDir)
+      .filter(F.col("dataset_id") === "daily")
+      .filter(F.col("date") >= lo && F.col("date") <= hi)
+      .filter(F.col("dataset_ts") >= from && F.col("dataset_ts") <= to)
+      .select("dataset_ts", "profile").collect()
+      .map(r => r.getLong(0) -> ProfileSerde.fromBytes(r.getAs[Array[Byte]](1)))
+      .sortBy(_._1)
+    assert(store.read("daily", from, to).map(_._1) == pruned.map(_._1).toSeq)
+    val whole = pruned.map(_._2).foldLeft(graft.profile.DatasetProfileView.empty)(_ merge _)
+    val merged = store.readMerged("daily", from, to)
+    assert(merged.columns("v").counts.get.n == 35 * 50)
+    assert(merged.columns.keySet == whole.columns.keySet)
+    // KLL compaction is randomized, so compare the exact fields
+    for ((c, w) <- whole.columns; m = merged.columns(c)) {
+      assert(m.counts == w.counts && m.types == w.types && m.ints == w.ints, c)
+      assert(m.distribution.map(d => (d.n, d.min, d.max)) ==
+        w.distribution.map(d => (d.n, d.min, d.max)), c)
+      assert(m.cardinality.map(_.estimate) == w.cardinality.map(_.estimate), c)
+    }
+  }
+
+  test("a 7-day readMerged on a 40-day store runs exactly one Spark job") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val store = new ProfileStore(spark, dailyDir)
+    val sc = spark.sparkContext
+    val (readGroup, flushGroup) = ("store-spec-read", "store-spec-flush")
+    val jobs = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`readGroup`)  => jobs.incrementAndGet()
+          case Some(`flushGroup`) => flushed.countDown()
+          case _                  =>
+        }
+    }
+    dailyDir // write the store before listening
+    sc.addSparkListener(listener)
+    val merged = try {
+      sc.setJobGroup(readGroup, "readMerged")
+      val m = try store.readMerged("daily", day0 + 10 * Day, day0 + 17 * Day - 1)
+        finally sc.clearJobGroup()
+      // the listener bus is FIFO: once the flush job's start arrives,
+      // every job the read started has been seen
+      sc.setJobGroup(flushGroup, "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      m
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"${jobs.get} jobs for one 7-day read")
+    assert(merged.columns("v").counts.get.n == 7 * 50)
   }
 }
